@@ -1,237 +1,129 @@
-"""Benchmark the engine's headline queries.
+"""Benchmark the engine's registry queries.
 
-Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
+With no names, times every queries.ALL entry not in queries.NOT_BENCHED,
+writes the per-query map to BENCH_DETAIL.json and prints two JSON lines,
+the full one and a compact twin:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+Named queries are timed in the order given, by the same method, and
+leave BENCH_DETAIL.json alone; an unknown name exits before Spark starts.
+--plans DIR first writes each query's formatted plan to DIR/<name>.txt.
 
-Each query is forced end-to-end with the noop sink (full computation,
-no driver collect cost).
+Runs at $SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture) on
+local[$SPARK_GRAFT_CPUS], so `SPARK_GRAFT_SF_DIR=<replica> python
+bench.py name ...` times a scaled replica. Each query is forced
+end-to-end with the noop sink (full computation, no driver collect cost).
 """
 
 from __future__ import annotations
 
+import argparse
+import glob
 import json
 import os
 import re
 import sys
 import time
 
-HEADLINE = [
-    "rebin_contained",
-    "rebin_straddle",
-    "poisson_lc_eta",
-    "poisson_cycle_eta",
-    "wdt_eta",
-    "linreg_slope",
-    "mann_kendall_z",
-    "correlation_pairs",
-    "correlation_pairs_dense",
-    "transform_chain_test",
-    "dedup_exact",
-    "minhash_signatures",
-    "lsh_candidate_pairs",
-    "dedup_clusters",
-    "roc_points",
-    "simhash64",
-    "ngram_jaccard",
-    "duplicated_spans",
-    "source_overlap",
-    "text_quality",
-    "text_repetition",
-    "tfidf_top_terms",
-    "unigram_logppl",
-    "semantic_dedup",
-    "pii_scrub",
-    "corpus_report",
-    "events_rollup",
-    "asof_enrich",
-    "value_quantiles",
-    "value_quantiles_approx",
-    "value_histogram",
-    "range_burst_count",
-    "text_bpe_tokens",
-    "doc_fingerprint",
-    "decontaminate",
-    "stratified_sample",
-    "chunk_documents",
-    "mix_sources",
-    "dataset_split",
-    "heavy_hitter_terms",
-    "heavy_hitters_cms",
-    "k_anonymity",
-    "sample_per_group",
-    "weighted_sample",
-    "curation_pipeline",
-    "pack_shards",
-    "cosine_neardup_blocked",
-    "ann_ivf_topk",
-    "knn_label",
-    "embedding_covariance",
-    "embedding_pca",
-    "pca_invariants",
-    "multimodal_decode",
-    "tpch_q1_pricing",
-    "tpch_q4_priority",
-    "tpch_q6_revenue",
-    "distinct_users",
-    "distinct_users_approx",
-    "pmi_collocations",
-    "logreg_quality",
-    "logreg_invariants",
-    "latest_event_per_user",
-    "series_features",
-    "event_funnel",
-    "cohort_retention",
-    "tpch_q13_custdist",
-    "quality_blend",
-    "fuzzy_vocab_pairs",
-    "sample_estimate",
-    "embedding_quantize",
-    "pq_codes",
-    "bpe_contract",
-    "kn_logppl",
-    "conversion_within_hour",
-    "label_centroids",
-    "value_outliers",
-    "dq_audit",
-    "hashed_tf_features",
-    "session_motifs",
-    "tpch_q14_promo_share",
-    "mix_temperature",
-    "tpch_q3_shipping",
-    "tpch_q5_local_revenue",
-    "sessionize",
-    "decontaminate_bloom",
-    "multimodal_real_decode",
-    "bm25_search",
-    "lsh_recall_eval",
-    "tpch_q18_large_orders",
-    "tpch_q10_returned",
-    "scd2_dimension",
-    "sales_rollup",
-    "event_type_pivot",
-    "tpch_q17_small_qty",
-    "tpch_q15_top_supplier",
-    "tpch_q22_idle_customers",
-    "cheapest_supplier_per_part",
-    "gopher_quality",
-    "rolling_hour_activity",
-    "event_type_unpivot",
-    "last_touch_attribution",
-    "tpch_q21_blame_supplier",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q19_disjunctive",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_late_priority",
-    "tpch_q16_supplier_counts",
-    "tpch_q20_excess_stock",
-    "ewma_burst",
-    "cusum_changepoint",
-    "seasonal_decompose",
-    "training_order",
-    "hard_negatives",
-    "theil_sen_slope",
-    "detector_ensemble",
-    "multimodal_resize_real",
-    "bigram_logppl",
-    "pack_sequences",
-    "embedding_kmeans",
-    "cluster_balanced_sample",
-    "char_entropy",
-    "global_quantiles",
-    "grouped_quantiles",
-    "dsir_scores",
-    "quality_percentile_gate",
-    "unimax_budget",
-    "mad_outliers",
-    "budget_materialize",
-    "fertility_by_lang",
-    "winnow_fingerprints",
-    "segment_dedup",
-    "psi_drift",
-    "ks_drift",
-    "zipf_slope",
-    "canonical_docs",
-    "calibration_bins",
-    "calibration_ece",
-    "filter_agreement",
-    "vocab_growth",
-    "key_skew",
-    "kmeans_silhouette",
-    "winsorize_values",
-    "source_js",
-    "split_leakage",
-    "decontaminate_fuzzy",
-    "longest_dup_span",
-    "normalize_text",
-    "psi_between_types",
-    "psi_timeline",
-    "embedding_shift",
-    "lang_agreement",
-    "categorical_drift",
-    "cluster_purity",
-    "cluster_nmi",
-    "packing_efficiency",
-    # set_similarity_join is deliberately NOT benched: an EXACT
-    # Jaccard join's output is workload-quadratic in true pairs, and
-    # the synthetic corpus is template-dense (~43k true pairs >= 0.9
-    # on the 1-in-5 slice at sf0.1) — same eval-class carve-out as
-    # lsh_recall_eval's ground truth
-    "mann_kendall_trend",
-    "embedding_simhash",
-    "benchmark_leakage",
-    # the stream_*_replay queries are deliberately NOT benched: they
-    # time the test-harness file replay (slice writes + availableNow
-    # drain), not a data-proportional operator — their value is the
-    # oracle-checked correctness row, asserted in the parity suite
-]
-
-# The query names the driver parsed from the ROUND-6 compact line
-# (BENCH_r06.json "parsed"."queries", slowest first). These are pinned
-# into the compact line regardless of their current time so the
-# driver's prev-vs-now per-query comparison never sees a query vanish
-# just because it got faster (see the compact-line comment in main()).
-COMPACT_PIN = [
-    "cluster_nmi", "embedding_kmeans", "dedup_clusters", "cluster_purity",
-    "bpe_contract", "quality_blend", "kmeans_silhouette",
-    "cluster_balanced_sample", "logreg_invariants", "logreg_quality",
-    "lsh_recall_eval", "canonical_docs", "mad_outliers", "heavy_hitters_cms",
-    "roc_points", "decontaminate_fuzzy", "decontaminate_bloom",
-    "bigram_logppl", "wdt_eta", "curation_pipeline", "source_overlap",
-    "kn_logppl", "detector_ensemble", "correlation_pairs_dense",
-    "poisson_lc_eta", "duplicated_spans", "semantic_dedup", "segment_dedup",
-    "longest_dup_span", "calibration_ece", "rebin_straddle", "lang_agreement",
-    "lsh_candidate_pairs", "benchmark_leakage", "cosine_neardup_blocked",
-    "winsorize_values", "tpch_q16_supplier_counts", "tpch_q21_blame_supplier",
-    "value_quantiles_approx", "linreg_slope", "vocab_growth",
-    "tfidf_top_terms", "calibration_bins", "rebin_contained",
-    "grouped_quantiles", "poisson_cycle_eta", "pq_codes", "filter_agreement",
-    "split_leakage", "decontaminate", "pca_invariants", "ann_ivf_topk",
-    "ngram_jaccard", "tpch_q8_market_share", "quality_percentile_gate",
-    "dq_audit", "unigram_logppl", "global_quantiles", "dsir_scores",
-    "tpch_q1_pricing", "cheapest_supplier_per_part", "embedding_quantize",
-    "tpch_q9_product_profit", "char_entropy", "psi_between_types",
-    "knn_label", "tpch_q7_nation_volume", "ks_drift",
-    "tpch_q18_large_orders", "tpch_q5_local_revenue", "psi_timeline",
-]
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
-def main() -> None:
+def select(names: list[str], q) -> list[str]:
+    """`names` in the order given, or every query not in NOT_BENCHED."""
+    if not names:
+        return [n for n in q.ALL if n not in q.NOT_BENCHED]
+    unknown = [n for n in names if n not in q.ALL]
+    if unknown:
+        raise SystemExit(f"bench.py: unknown query name(s): {', '.join(unknown)}")
+    return names
+
+
+def compact_pin(root: str = HERE) -> list[str]:
+    """The names parsed from the latest recorded compact line:
+    "parsed"."queries" of the highest-numbered BENCH_r<N>.json (numeric
+    order, as plain sorted() puts r10 before r9; variants such as
+    BENCH_r07_c8.json are side runs, not the recorded line). Empty if
+    no round is recorded."""
+    rounds = {}
+    for path in glob.glob(os.path.join(root, "BENCH_r*.json")):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(path))
+        if m:
+            rounds[int(m.group(1))] = path
+    if not rounds:
+        return []
+    with open(rounds[max(rounds)]) as f:
+        return list((json.load(f).get("parsed") or {}).get("queries") or {})
+
+
+def compact_line(detail: dict, pin: list[str]) -> dict:
+    """The final output line: a twin of the full one that fits the last
+    ~2000 chars of output, which is all a BENCH_r<N>.json record keeps
+    ("tail") and parses (a full line once came back "parsed": null).
+    The 160 names alone are ~2500 chars, so it keeps a subset: every
+    `pin` name first, so a query that got faster never drops out of the
+    round-over-round comparison and reads as dropped from the bench,
+    then the slowest rest up to the budget, at 2 decimals; "n_omitted"
+    counts the rest."""
+    timings = detail["queries"]
+    compact = {k: detail[k] for k in ("metric", "value", "unit", "sf")}
+    compact.update(
+        n_queries=len(timings), n_omitted=0, queries_file="BENCH_DETAIL.json"
+    )
+    pinned = [n for n in pin if n in timings]
+    rest = sorted(
+        (n for n in timings if n not in pinned), key=lambda n: (-timings[n], n)
+    )
+    qsel: dict = {}
+    for name in pinned + rest:
+        trial = dict(
+            compact,
+            n_omitted=len(timings) - len(qsel) - 1,
+            queries={**qsel, name: round(timings[name], 2)},
+        )
+        if len(json.dumps(trial, separators=(",", ":"))) > 1900:
+            break
+        qsel[name] = round(timings[name], 2)
+    return dict(compact, n_omitted=len(timings) - len(qsel), queries=qsel)
+
+
+def _force(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("names", nargs="*", metavar="name", help="queries to time")
+    ap.add_argument("--plans", metavar="DIR", help="write plans to DIR first")
+    args = ap.parse_args(argv)
+
+    from gnip_trend_detection_spark import queries as q
+
+    names = select(args.names, q)
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    from gnip_trend_detection_spark import queries as q
-    from gnip_trend_detection_spark.session import get_spark
+    from gnip_trend_detection_spark.session import get_spark, release_cached
 
     spark = get_spark(app_name="bench")
+
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
+        for name in names:
+            df = q.ALL[name](spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
+                f.write(plan)
+            release_cached(spark)
 
     # warm the JVM, parquet footers, and the noop sink path outside the
     # timed region (the first write otherwise pays one-time init)
     spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    spark.range(100).write.format("noop").mode("overwrite").save()
+    _force(spark.range(100))
 
     # warm each query's generated-code paths at the smoke scale factor:
     # whole-stage codegen compiles per query SHAPE (cached by generated
@@ -242,113 +134,59 @@ def main() -> None:
     # measure data-proportional work, which is what scales.
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for name in HEADLINE:
-            q.ALL[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        spark.catalog.clearCache()
+        for name in names:
+            _force(q.ALL[name](spark, warm_dir))
+        release_cached(spark)
 
     # min of 2 timed runs per query: a transient external load spike
     # (observed inflating a 0.9s query to 111s mid-bench) then taints
     # one run, not the recorded number. Plans are warm either way.
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = q.ALL[name]
+    for name in names:
         best = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            _force(q.ALL[name](spark, sf_dir))
             best = min(best, time.perf_counter() - t0)
-        # drop this query's persisted intermediates before the next
-        # query: min-of-2 keeps its warm-cache semantics (runs of the
-        # SAME query share blocks, as in earlier rounds), but 74
-        # queries' worth of leftover blocks no longer squeeze executor
-        # memory for later ones (observed: events_rollup 0.6s isolated
-        # vs 2.2s late in a dirty-cache sweep)
-        spark.catalog.clearCache()
+        # drop this query's persisted and local-checkpoint blocks before
+        # the next query: min-of-2 keeps its warm-cache semantics, but
+        # leftover blocks no longer squeeze executor memory for later
+        # queries (observed: events_rollup 0.6s isolated vs 2.2s late
+        # in a dirty-cache sweep)
+        release_cached(spark)
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 
     # decorrelation pass: the two samples above are CONSECUTIVE, so a
     # host-pressure window lasting a few seconds taints both and the
     # min records an 8x outlier for whichever query it landed on
-    # (r03: sample_estimate 2.53s vs 0.4s isolated; next sweep:
-    # lsh_candidate_pairs 8.0s vs 0.8s — different query, same class).
-    # One more sample per query, a full sweep (= minutes) away from
-    # the first two, makes a spike have to hit the SAME query twice
-    # minutes apart to survive into the record. Cold cache, warm plans
-    # — min(warm-min, cold-retry) only replaces numbers a spike
-    # inflated past even a cold run.
-    for name in HEADLINE:
+    # (seen: sample_estimate 2.53s vs 0.4s isolated). One more sample per
+    # query, a full sweep away from the first two, makes a spike have
+    # to hit the SAME query twice minutes apart to survive into the
+    # record; it only replaces numbers a spike inflated past a cold run.
+    for name in names:
         t0 = time.perf_counter()
-        q.ALL[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        _force(q.ALL[name](spark, sf_dir))
         dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
+        release_cached(spark)
         if dt < timings[name]:
-            print(
-                f"# {name}: {timings[name]:.3f}s -> {dt:.3f}s (retry pass)",
-                file=sys.stderr,
-            )
+            print(f"# {name}: {timings[name]:.3f}s -> {dt:.3f}s (retry)", file=sys.stderr)
             timings[name] = round(dt, 3)
 
-    total = round(sum(timings.values()), 3)
     detail = {
         "metric": "headline_queries_total_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
     }
-    # full per-query map, both as the (long) canonical line and as a
-    # file for anything that can't see the whole line
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),
-        "w",
-    ) as f:
-        json.dump(detail, f, indent=1)
+    # the full map, as the (long) canonical line and, for a full-set run,
+    # as a file for anything that can't see the whole line
+    if not args.names:
+        with open(os.path.join(HERE, "BENCH_DETAIL.json"), "w") as f:
+            json.dump(detail, f, indent=1)
     print(json.dumps(detail))
-    # The grading harness snapshots only the LAST ~2000 output chars;
-    # with ~100 headline queries the full line overflows that window
-    # (r02: "parsed": null). The FINAL line is therefore a compact
-    # twin guaranteed to fit: same metric/value/unit/sf, per-query
-    # times for a subset of queries, and a pointer to the full map.
-    # All 160 names cannot fit (the names alone are ~2500 chars), so
-    # the subset is chosen to keep the driver's round-over-round
-    # comparison loss-free: every query the driver parsed from the
-    # PREVIOUS round's compact line is pinned in (COMPACT_PIN — a
-    # query that got FASTER must not fall out of the line and read as
-    # "dropped_from_bench", the r06 PERF artifact), then the slowest
-    # remaining queries fill the budget. Values at 2 decimals here
-    # (full 3-decimal map in BENCH_DETAIL.json and the canonical line
-    # above); "n_omitted" declares the truncation explicitly.
-    compact: dict = {
-        "metric": "headline_queries_total_sec",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "n_queries": len(timings),
-        "n_omitted": len(timings),
-        "queries_file": "BENCH_DETAIL.json",
-    }
-    pinned = [n for n in COMPACT_PIN if n in timings]
-    rest = sorted(
-        (kv for kv in timings.items() if kv[0] not in COMPACT_PIN),
-        key=lambda kv: (-kv[1], kv[0]),
-    )
-    order = [(n, timings[n]) for n in pinned] + rest
-    qsel: dict = {}
-    for name, t in order:
-        trial = dict(
-            compact,
-            queries={**qsel, name: round(t, 2)},
-            n_omitted=len(timings) - len(qsel) - 1,
-        )
-        if len(json.dumps(trial, separators=(",", ":"))) > 1900:
-            break
-        qsel[name] = round(t, 2)
-    compact["queries"] = qsel
-    compact["n_omitted"] = len(timings) - len(qsel)
-    print(json.dumps(compact, separators=(",", ":")))
+    print(json.dumps(compact_line(detail, compact_pin()), separators=(",", ":")))
 
 
 if __name__ == "__main__":

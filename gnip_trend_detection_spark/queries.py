@@ -3,7 +3,9 @@
 One entry per implemented operator from SURVEY.md §2 plus the
 training-data-pipeline extensions. Each has a matching DuckDB oracle
 in oracles.py (same math, same rounding, same column names/aliases) —
-see oracles.py for the float-parity rules.
+see oracles.py for the float-parity rules — unless NO_ORACLE gives the
+reason it has none. bench.py times every query that NOT_BENCHED does
+not exclude.
 
 Interval widths for derived fixtures are chosen dyadic-friendly
 (60/80/120/3600/14400 s) so rebin weights are exactly representable
@@ -4202,4 +4204,62 @@ ALL: dict[str, QueryFn] = {
     "hard_negatives": q_hard_negatives,
     "theil_sen_slope": q_theil_sen_slope,
     "detector_ensemble": q_detector_ensemble,
+}
+
+# ALL names that bench.py does not time, each with its reason.
+NOT_BENCHED: dict[str, str] = {
+    **dict.fromkeys(
+        [n for n in ALL if n.startswith("stream_")],
+        "times the file replay (slice writes + availableNow drain), not an "
+        "operator; its value is the oracle-checked row in the parity suite",
+    ),
+    **dict.fromkeys(
+        [n for n in ALL if n.startswith("transform_") and n != "transform_chain_test"],
+        "one array transform over embeddings; transform_chain_test times the chain",
+    ),
+    **dict.fromkeys(
+        [f"multimodal_{s}" for s in ("meta", "features", "frames", "resize")],
+        "fake-codec media stage; multimodal_decode and multimodal_resize_real time "
+        "the media passes",
+    ),
+    "rebin_span": "one grid-span aggregate over the counts rebin_contained times",
+    "rebin_filtered": "scan-filtered subset of rebin_straddle's rebin",
+    "rebin_value_weighted": "measure-column variant of rebin_straddle's rebin",
+    "plot_rebin": "plot-time regroup of poisson_lc_eta's output",
+    "detect_threshold": "theta cut over poisson_lc_eta's output",
+    "detect_top1": "top-1 over poisson_lc_eta's output",
+    "poisson_cycle_nu": "poisson_cycle_eta's model pass with the nu column kept",
+    "poisson_cycle_weekday": "period-key variant of poisson_cycle_eta",
+    "precision_recall": "metric over the holdout scoring roc_points times",
+    "detection_latency": "first-detection scan over poisson_lc_eta's output",
+    "text_token_stats": "tokenize pass that text_quality and corpus_report time",
+    "text_lang_id": "row-local expression that lang_agreement and curation_pipeline time",
+    "set_similarity_join": (
+        "an exact Jaccard join's output is quadratic in true pairs, and the "
+        "template-dense corpus has ~43k pairs >= 0.9 on the 1-in-5 slice at sf0.1"
+    ),
+    "bpe_vocab": "the iterative BPE trainer that bpe_contract times",
+    "bpe_encode_stats": "BPE train + encode; bpe_contract and text_bpe_tokens time both",
+    "cosine_neardup_pairs": "per-pair baseline of cosine_neardup_blocked, the benched path",
+    "ann_topk": "brute-force baseline of ann_ivf_topk, the benched ANN path",
+    "ann_lsh_topk": "third ANN path; ann_ivf_topk is the benched one",
+    "top_users_per_event": "window top-k over the events scan latest_event_per_user times",
+    "props_field_stats": "one JSON-field aggregate over the events scan events_rollup times",
+}
+
+# ALL names with no oracles.build() entry; the parity suite checks rows only.
+NO_ORACLE: dict[str, str] = {
+    "bpe_vocab": (
+        "iterative merge training is not SQL-expressible; bpe_contract "
+        "hash-checks its SQL-derivable half"
+    ),
+    "bpe_encode_stats": "trains with the same iterative BPE loop as bpe_vocab",
+    "embedding_pca": (
+        "eigenvectors are not SQL-expressible; pca_invariants hash-checks the "
+        "decomposition's contract"
+    ),
+    "logreg_quality": (
+        "per-row probabilities wobble in the last ulp across partitionings; "
+        "logreg_invariants hash-checks the solver's certificate"
+    ),
 }

@@ -78,12 +78,10 @@ def release_cached(spark: SparkSession) -> int:
     BPE-merge round. The library function cannot unpersist those
     itself: the blocks must outlive the caller's ACTION, which happens
     after the function returns. Callers that run many queries in one
-    long-lived session therefore release between queries — bench.py
-    and tools/qbench.py via spark.catalog.clearCache() after every
-    timed action (their blocks are all CacheManager entries), the CLI
-    via this helper after materializing each subcommand's output
-    (which also covers localCheckpoint RDD blocks that clearCache
-    does not touch)."""
+    long-lived session therefore call this helper between queries, as
+    bench.py and the plan and scale tools do after every action.
+    spark.catalog.clearCache() alone is not enough: it drops only
+    CacheManager entries, never the localCheckpoint RDD blocks."""
     n = 0
     try:
         jcat = spark._jsparkSession.sharedState().cacheManager()

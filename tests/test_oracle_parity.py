@@ -10,6 +10,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from gnip_trend_detection_spark import queries as q
 from tests.parity import compare, duck_connection
 
 SF = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.001")
@@ -28,6 +29,12 @@ def con():
 def test_every_query_has_oracle_or_is_declared():
     missing = set(ORACLES) - set(QUERIES)
     assert not missing, f"oracles without queries: {missing}"
+    undeclared = set(q.ALL) - set(ORACLES) - set(q.NO_ORACLE)
+    assert not undeclared, f"queries with neither oracle nor NO_ORACLE reason: {undeclared}"
+    stale = (set(q.NO_ORACLE) & set(ORACLES)) | (set(q.NO_ORACLE) - set(q.ALL))
+    assert not stale, f"NO_ORACLE names with an oracle or not in ALL: {stale}"
+    unknown = set(q.NOT_BENCHED) - set(q.ALL)
+    assert not unknown, f"NOT_BENCHED names not in ALL: {unknown}"
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

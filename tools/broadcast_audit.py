@@ -54,7 +54,7 @@ def main() -> None:
     only = set(sys.argv[2:])
 
     from gnip_trend_detection_spark import queries as q
-    from gnip_trend_detection_spark.session import get_spark
+    from gnip_trend_detection_spark.session import get_spark, release_cached
 
     spark = get_spark(app_name="broadcast-audit")
     flagged = {}
@@ -62,7 +62,7 @@ def main() -> None:
     for name in sorted(q.ALL):
         if only and name not in only:
             continue
-        spark.catalog.clearCache()
+        release_cached(spark)
         try:
             df = q.ALL[name](spark, sf_dir)
         except Exception as e:  # noqa: BLE001 - report and continue

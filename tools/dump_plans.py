@@ -106,7 +106,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
     from gnip_trend_detection_spark import queries as q
-    from gnip_trend_detection_spark.session import get_spark
+    from gnip_trend_detection_spark.session import get_spark, release_cached
 
     spark = get_spark(app_name="dump-plans")
     lines = [
@@ -121,7 +121,7 @@ def main() -> int:
         "",
     ]
     for name, why in SHOWCASE:
-        spark.catalog.clearCache()
+        release_cached(spark)
         df = q.ALL[name](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         lines.append(f"## {name}")

@@ -2,13 +2,12 @@
 heaviest query families on a Kx replica of the sf0.1 fixtures (K=10 ~
 sf1) so per-query times are parallelism-bound instead of job-overhead-
 bound, then compare 8-core vs 32-core wall time; plus a task-time skew
-probe of the LSH band join.
+probe of the LSH band join. Time queries on a replica with
+`SPARK_GRAFT_SF_DIR=<dst> python bench.py q ...`.
 
 Modes (env SPARK_GRAFT_CPUS picks the core count, as everywhere):
   gen   <dst> [K]        replicate sf0.1 -> dst (scalecheck's shifted-
                          key semantics: honest workload scaling)
-  bench <dir> q [q ...]  noop-sink timing, warm plan pass at sf0.001,
-                         2 trials, min + all, one JSON line
   skew  <dir>            run the banded-LSH candidate join with the UI
                          REST API on; report the per-stage task-time
                          distribution (max/p75/median) of the heaviest
@@ -38,33 +37,6 @@ def gen(dst: str, k: int) -> None:
     spark = get_spark(app_name="scale-gen")
     replicate(spark, k, dst)
     print(f"replicated {SRC} x{k} -> {dst}")
-
-
-def bench(sf_dir: str, names: list[str]) -> None:
-    from gnip_trend_detection_spark import queries as q
-    from gnip_trend_detection_spark.session import get_spark
-
-    spark = get_spark(app_name="scale-bench")
-    spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    spark.range(100).write.format("noop").mode("overwrite").save()
-    warm = "/root/testdata/sf0.001"
-    for name in names:
-        q.ALL[name](spark, warm).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-    out = {}
-    for name in names:
-        ts = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            q.ALL[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            ts.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
-        out[name] = {"min": min(ts), "all": ts}
-        print(f"# {name}: {out[name]}", file=sys.stderr)
-    print(json.dumps({"cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-                      "dir": sf_dir, "queries": out}))
 
 
 def skew(sf_dir: str) -> None:
@@ -138,8 +110,6 @@ def main() -> None:
     mode = sys.argv[1]
     if mode == "gen":
         gen(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 10)
-    elif mode == "bench":
-        bench(sys.argv[2], sys.argv[3:])
     elif mode == "skew":
         skew(sys.argv[2])
     else:

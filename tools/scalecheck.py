@@ -121,7 +121,7 @@ def main() -> int:
     names = sys.argv[2:] or DEFAULT_QUERIES
 
     from gnip_trend_detection_spark import queries as q
-    from gnip_trend_detection_spark.session import get_spark
+    from gnip_trend_detection_spark.session import get_spark, release_cached
 
     spark = get_spark(app_name="scalecheck")
     dst = tempfile.mkdtemp(prefix="scalecheck_")
@@ -131,7 +131,7 @@ def main() -> int:
     def timed(name: str, sf_dir: str) -> float:
         best = float("inf")
         for _ in range(2):
-            spark.catalog.clearCache()
+            release_cached(spark)
             t0 = time.perf_counter()
             q.ALL[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
